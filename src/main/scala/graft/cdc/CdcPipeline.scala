@@ -17,6 +17,10 @@ import org.apache.spark.sql.types.StructType
   *     → foreachBatch: collapse latest-per-key + idempotent
   *       monotonic MERGE into the per-table warehouse            (W1, ST1/2/7/8)
   *
+  * The merge query reads each micro-batch from the source exactly once:
+  * [[mergeMicroBatch]] persists the batch for one retry attempt and
+  * unpersists it when that attempt ends, so no cache outlives its batch.
+  *
   * Exactly-once into a non-transactional sink (SURVEY §7.4.1): Structured
   * Streaming checkpoints offsets (ST3); the merge is idempotent (PK-keyed)
   * and monotonic (commit-ts guard), so at-least-once redelivery of a batch
@@ -183,63 +187,79 @@ final class CdcPipeline(
     * backfills (S2 snapshot mode) reuse the same path.
     *
     * ST4 late-row quarantine: rows whose commit timestamp lags the
-    * batch's high-water mark by more than `watermarkDelay` append to
-    * `warehouseDir/_late` INSTEAD of merging — the reference's 24 h
-    * CDC-TTL staleness bound, with quarantine rather than silent
-    * application (spec.md:134 FR-015). */
+    * pre-batch high-water mark by more than `watermarkDelay` (or is
+    * NULL) append to `warehouseDir/_late/batch_<id>` INSTEAD of merging
+    * — the reference's 24 h CDC-TTL staleness bound, with quarantine
+    * rather than silent application (spec.md:134 FR-015).
+    *
+    * One source read per batch: a foreachBatch frame recomputes its
+    * whole lineage (file listing, read, JSON parse) on every action, so
+    * the body persists it once and every action below — the one stats
+    * aggregate, the quarantine write, each table's touched-bucket
+    * collect and merge write — reads the cached rows. The cache lives
+    * exactly as long as one attempt: `persist` at the top of the retry
+    * body, `unpersist` in its `finally`, so a failed attempt releases
+    * its blocks before the retry rebuilds them. */
   def mergeMicroBatch(batch: DataFrame, batchId: Long): Unit = withRetry(s"merge batch $batchId") {
     // (no early `return` here: NonLocalReturnControl would be caught by
     // the retry wrapper and misread as a failure)
-    val bounds =
-      if (batch.isEmpty) null
-      else batch.agg(max(col(ordCol))).head()
-    val batchMax = if (bounds == null || bounds.isNullAt(0)) None
-      else Some(bounds.getLong(0))
-    // lateness is judged against the PRE-batch high-water mark; rows with
-    // a NULL commit ts are unprocessable by an ordering-based merge and
-    // quarantine too (they'd otherwise vanish in the comparisons)
-    val prevHwm = readHwm()
-    val lateCond = prevHwm match {
-      case Some(hwm) =>
-        col(ordCol).isNull || col(ordCol) < lit(hwm - latenessMicros)
-      case None => col(ordCol).isNull
-    }
-    val current = batch.filter(!coalesce(lateCond, lit(true)))
-    val late = batch.filter(coalesce(lateCond, lit(true)))
-    if (!late.isEmpty)
-      // one directory per batch id, overwritten on retry/replay — the
-      // quarantine write stays idempotent under at-least-once delivery
-      late.write.mode("overwrite").parquet(s"$warehouseDir/_late/batch_$batchId")
-    val tables =
-      if (current.isEmpty) Array.empty[String]
-      else current.select("__table").distinct().collect().map(_.getString(0))
-    tables.foreach { table =>
-      keysByTable.get(table).foreach { keys =>
-        val updates = current.filter(col("__table") === table).drop("__table")
-        val partialCols =
-          if (partialUpdate) updates.columns.filterNot(c => keys.contains(c) ||
-            c == ordCol || c == deleteCol).toSeq
-          else Seq.empty
-        if (warehouseBuckets > 0)
-          // COW path: rewrites only the buckets this batch's keys touch
-          graft.util.BucketedTable.merge(spark, tablePath(table), updates,
-            keys, ordCol, deleteCol, partialCols, warehouseBuckets)
-        else {
-          val merged = readTable(table) match {
-            case Some(target) =>
-              Upsert.mergeBatch(target, updates, keys, ordCol, deleteCol, partialCols)
-            case None =>
-              Upsert.collapseBatch(updates, keys, col(ordCol), deleteCol, partialCols)
-                .drop(deleteCol)
+    val cached = batch.persist()
+    try {
+      // lateness is judged against the PRE-batch high-water mark; rows
+      // with a NULL commit ts are unprocessable by an ordering-based
+      // merge and quarantine too (they'd otherwise vanish in the
+      // comparisons)
+      val prevHwm = readHwm()
+      val isLate = prevHwm match {
+        case Some(hwm) =>
+          col(ordCol).isNull || col(ordCol) < lit(hwm - latenessMicros)
+        case None => col(ordCol).isNull
+      }
+      // one aggregate answers every driver-side question about the
+      // batch; rows are (__table, max, late, current)
+      val stats = cached.groupBy("__table").agg(
+          max(col(ordCol)).as("max"),
+          count(when(isLate, true)).as("late"),
+          count(when(!isLate, true)).as("current"))
+        .collect()
+      val batchMax = stats.filterNot(_.isNullAt(1)).map(_.getLong(1)).maxOption
+      if (stats.exists(_.getLong(2) > 0))
+        // one directory per batch id, overwritten on retry/replay — the
+        // quarantine write stays idempotent under at-least-once delivery
+        cached.filter(isLate)
+          .write.mode("overwrite").parquet(s"$warehouseDir/_late/batch_$batchId")
+      val current = cached.filter(!isLate)
+      val tables = stats.filter(r => !r.isNullAt(0) && r.getLong(3) > 0)
+        .map(_.getString(0))
+      tables.foreach { table =>
+        keysByTable.get(table).foreach { keys =>
+          val updates = current.filter(col("__table") === table).drop("__table")
+          val partialCols =
+            if (partialUpdate) updates.columns.filterNot(c => keys.contains(c) ||
+              c == ordCol || c == deleteCol).toSeq
+            else Seq.empty
+          if (warehouseBuckets > 0)
+            // COW path: rewrites only the buckets this batch's keys touch
+            graft.util.BucketedTable.merge(spark, tablePath(table), updates,
+              keys, ordCol, deleteCol, partialCols, warehouseBuckets)
+          else {
+            val merged = readTable(table) match {
+              case Some(target) =>
+                Upsert.mergeBatch(target, updates, keys, ordCol, deleteCol, partialCols)
+              case None =>
+                Upsert.collapseBatch(updates, keys, col(ordCol), deleteCol, partialCols)
+                  .drop(deleteCol)
+            }
+            writeTable(table, merged)
           }
-          writeTable(table, merged)
         }
       }
-    }
-    // advance the high-water mark only after the batch fully merged
-    val newHwm: Option[Long] =
-      (prevHwm.toList ::: batchMax.toList).reduceOption(_ max _)
-    newHwm.foreach(v => writeHwm(v))
+      // advance the high-water mark only after the batch fully merged;
+      // late rows count toward it too
+      val newHwm: Option[Long] =
+        (prevHwm.toList ::: batchMax.toList).reduceOption(_ max _)
+      newHwm.foreach(v => writeHwm(v))
+    } finally cached.unpersist()
   }
 
   /** V1–V6 as a pre-merge gate (SURVEY §7.4.4): a Spark stream fixes its

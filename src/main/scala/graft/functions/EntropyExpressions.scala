@@ -24,8 +24,7 @@ object EntropyKernels {
     * sum Σ c·⌊ln c·10⁶⌋ is exact 64-bit integer arithmetic, and the
     * final division is one floor division by n (`floorDiv` ≡ the SQL
     * `(x − pmod(x, n)) / n`). Returns (n_chars_counted, entropy_fp)
-    * for non-empty input; the caller filters empties, matching the SQL
-    * shape's `length > 0` gate. */
+    * for any input; the empty string gives (0, 0), since 0·ln 0 = 0. */
   def charEntropy(s: UTF8String): InternalRow = {
     val str = s.toString
     val counts = new java.util.HashMap[Integer, Array[Long]]()
@@ -44,8 +43,8 @@ object EntropyKernels {
       val c = it.next()(0)
       wsum += c * lfp(c)
     }
-    val cross = lfp(n) * n - wsum
-    new GenericInternalRow(Array[Any](n, java.lang.Math.floorDiv(cross, n)))
+    val entropy = if (n == 0L) 0L else java.lang.Math.floorDiv(lfp(n) * n - wsum, n)
+    new GenericInternalRow(Array[Any](n, entropy))
   }
 }
 
@@ -56,9 +55,9 @@ object EntropyKernels {
   * row per corpus character; this is a single fused pass over the
   * string with an alphabet-sized local map, bit-identical by the kernel
   * contract above (TextSpec pins native ≡ SQL shape on a Unicode
-  * corpus). NULL in → NULL out; empty input must be filtered by the
-  * caller (entropy of zero characters is undefined — the DF API keeps
-  * the `length > 0` gate). */
+  * corpus). NULL in → NULL out; the empty string → (0, 0). The DF API
+  * ([[graft.text.TextAnalysis.charEntropy]]) still drops empty docs,
+  * matching the SQL shape's `length > 0` gate. */
 case class CharEntropy(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StructType(Seq(
     StructField("n_chars_counted", LongType, nullable = false),

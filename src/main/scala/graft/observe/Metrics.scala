@@ -70,11 +70,18 @@ final class MetricsRegistry(namespace: String = "cdc") {
   * from the start event is remembered — every gauge keys by the SAME
   * label for a query's whole lifecycle (a name-keyed health gauge that
   * never cleared on id-keyed termination is exactly the stale-dashboard
-  * bug this prevents). */
+  * bug this prevents).
+  *
+  * `replication_lag_seconds` is the trigger's start time minus the
+  * newest event time the batch carried (`eventTime("max")`, reported
+  * only by a query with a watermark that processed rows): how far the
+  * sink trails the source's commit clock. The listener bus is async —
+  * call [[settle]] before reading what the last trigger reported. */
 final class CdcQueryListener(registry: MetricsRegistry) extends StreamingQueryListener {
   import StreamingQueryListener._
 
   private val names = TrieMap[String, String]() // query id → display label
+  @volatile private var events = 0L
 
   private def label(id: java.util.UUID, name: String): String = {
     val l = Option(name).getOrElse(id.toString)
@@ -96,6 +103,13 @@ final class CdcQueryListener(registry: MetricsRegistry) extends StreamingQueryLi
     registry.observeHistogram("batch_duration_ms",
       p.durationMs.values().stream().mapToLong(_.longValue()).sum().toDouble,
       Map("query" -> name))
+    Option(p.eventTime.get("max")).foreach { newest =>
+      val lagMs = java.time.Instant.parse(p.timestamp).toEpochMilli -
+        java.time.Instant.parse(newest).toEpochMilli
+      registry.setGauge("replication_lag_seconds", lagMs / 1000.0,
+        Map("query" -> name))
+    }
+    events += 1
   }
 
   override def onQueryTerminated(e: QueryTerminatedEvent): Unit = {
@@ -105,5 +119,9 @@ final class CdcQueryListener(registry: MetricsRegistry) extends StreamingQueryLi
     registry.setGauge("connector_health", 0.0, Map("query" -> name))
     e.exception.foreach(_ => registry.inc("errors_total", 1.0,
       Map("query" -> name, "type" -> "query_terminated")))
+    events += 1
   }
+
+  /** Bounded wait for the async listener bus to drain. */
+  def settle(): Unit = ListenerDrain.settle(() => events)
 }

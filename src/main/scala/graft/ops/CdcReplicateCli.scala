@@ -93,10 +93,12 @@ object CdcReplicateCli {
     // stopped on failure nor reported as CDC state
     val pre = spark.streams.active.map(_.id).toSet
     var mine = Set.empty[String]
+    var merge = ""
     try {
       val q = pipeline.start(raw, schema, Trigger.AvailableNow())
       def started = spark.streams.active.filterNot(x => pre(x.id))
-      mine = started.map(_.id.toString).toSet + q.id.toString
+      merge = q.id.toString
+      mine = started.map(_.id.toString).toSet + merge
       q.awaitTermination()
       started.foreach(_.awaitTermination())
     } catch { case t: Throwable =>
@@ -111,18 +113,14 @@ object CdcReplicateCli {
       val n = pipeline.readTable(t).map(_.count()).getOrElse(0L)
       println(s"""{"table": "$t", "rows": $n}""")
     }
-    // scope the contract metric to THIS run's queries exactly like the
-    // state line below: queries here are unnamed, so the listener keys
-    // by query id and the registry key is fully reconstructible — an
-    // embedded caller's concurrent query can't inflate the count
-    val mineMetrics = mine.map(id => s"cdc_records_replicated_total{query=$id}")
-    val replicatedRow = registry.snapshot(spark)
-      .filter(org.apache.spark.sql.functions.col("metric")
-        .isin(mineMetrics.toSeq: _*))
-      .agg(org.apache.spark.sql.functions.coalesce(
-        org.apache.spark.sql.functions.sum("value"),
-        org.apache.spark.sql.functions.lit(0.0))).head().getDouble(0)
-    println(s"""{"metric": "records_replicated_total", "value": $replicatedRow}""")
+    // the contract metric counts the MERGE query's input rows only: the
+    // DLQ query reads the same envelopes a second time, and an embedded
+    // caller's concurrent query is not CDC traffic. Queries here are
+    // unnamed, so the listener keys by query id.
+    regListener.settle() // async listener bus — drain before reading
+    val replicated = registry.counter("records_replicated_total",
+      Map("query" -> merge))
+    println(s"""{"metric": "records_replicated_total", "value": $replicated}""")
     // state-bound line: the merge path collapses latest-per-key INSIDE
     // each foreachBatch, so it keeps ZERO store state by design — the
     // zero row is the bound being reported, not a missing metric. Any

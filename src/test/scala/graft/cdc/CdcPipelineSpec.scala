@@ -290,6 +290,133 @@ class CdcPipelineSpec extends SparkSpec {
     assert(snap1 == snap2 && snap1 == Set(("u1", "alice", "inactive")))
   }
 
+  test("ST4 late-row quarantine and the high-water mark: late and NULL-ts " +
+      "rows land in _late/batch_<id>, an all-late table is untouched, the " +
+      "HWM covers every row seen, an empty batch changes nothing — " +
+      "snapshot AND bucketed-COW warehouses") {
+    import java.nio.file.Paths
+    import org.apache.spark.sql.Row
+    val schema = StructType(Seq(
+      StructField("__table", StringType), StructField("user_id", StringType),
+      StructField("username", StringType), StructField("status", StringType),
+      StructField("commit_timestamp", LongType),
+      StructField("__deleted", StringType)))
+    def batch(rows: (String, String, String, java.lang.Long)*) =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map { case (t, id, st, ts) =>
+        Row(t, id, s"name-$id", st, ts, "false")
+      }: _*), schema)
+    def lateCase(buckets: Int): Unit = {
+      val wh = tmpDir(); val cp = tmpDir()
+      // lateness bound 1 s = 1,000,000 µs of commit time
+      val pipeline = new CdcPipeline(spark, wh, cp,
+        Map("users" -> Seq("user_id"), "admins" -> Seq("user_id")),
+        watermarkDelay = "1 second", warehouseBuckets = buckets)
+      def state(table: String): Set[(String, String, Long)] =
+        pipeline.readTable(table).get.select("user_id", "status", "commit_timestamp")
+          .as[(String, String, Long)].collect().toSet
+      def hwm(): Long = Files.readString(Paths.get(s"$cp/_hwm")).trim.toLong
+      def late(id: Long): Set[(String, String, Option[Long])] =
+        spark.read.parquet(s"$wh/_late/batch_$id")
+          .select("__table", "user_id", "commit_timestamp")
+          .as[(String, String, Option[Long])].collect().toSet
+
+      // batch 1: no HWM yet, nothing is late; sets HWM = 20 s
+      pipeline.mergeMicroBatch(batch(
+        ("users", "u1", "active", 10000000L),
+        ("users", "u2", "active", 20000000L),
+        ("admins", "a1", "active", 5000000L)), 1L)
+      assert(hwm() == 20000000L, s"buckets=$buckets")
+      assert(!Files.exists(Paths.get(s"$wh/_late/batch_1")))
+      assert(state("users") ==
+        Set(("u1", "active", 10000000L), ("u2", "active", 20000000L)))
+      val admins1 = state("admins")
+
+      // batch 2: the cut is 20 s − 1 s = 19 s; 'admins' is entirely late
+      pipeline.mergeMicroBatch(batch(
+        ("users", "u1", "stale", 15000000L),        // older than the cut
+        ("users", "u3", "active", null),            // NULL commit ts
+        ("users", "u2", "inactive", 25000000L),     // current
+        ("admins", "a1", "stale", 12000000L),
+        ("admins", "a2", "active", 18000000L)), 2L)
+      assert(late(2L) == Set(("users", "u1", Some(15000000L)),
+        ("users", "u3", None), ("admins", "a1", Some(12000000L)),
+        ("admins", "a2", Some(18000000L))), s"buckets=$buckets")
+      assert(state("admins") == admins1, s"buckets=$buckets all-late table merged")
+      assert(state("users") ==
+        Set(("u1", "active", 10000000L), ("u2", "inactive", 25000000L)))
+      assert(hwm() == 25000000L, s"buckets=$buckets")
+
+      // an empty batch: HWM, warehouse and quarantine all unchanged
+      val users2 = state("users")
+      pipeline.mergeMicroBatch(batch(), 3L)
+      assert(hwm() == 25000000L)
+      assert(state("users") == users2 && state("admins") == admins1)
+      assert(!Files.exists(Paths.get(s"$wh/_late/batch_3")))
+    }
+    lateCase(buckets = 0)
+    lateCase(buckets = 4)
+  }
+
+  test("one source read per micro-batch: a multi-file AvailableNow drain " +
+      "reads each landed line once, and every batch's cache is released — " +
+      "also when the first merge attempt fails and is retried") {
+    import java.nio.file.Paths
+    val in = tmpDir()
+    val lines = (0 until 4).map { f =>
+      val evs = (0 until 5).map(i =>
+        ev("UPDATE", 1000L + f * 10 + i, s"u${i % 3}", s"n$f$i", "active"))
+      Files.writeString(Paths.get(s"$in/f$f.json"), evs.mkString("\n"))
+      evs.size
+    }.sum
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+
+    val pipeline = new CdcPipeline(spark, tmpDir(), tmpDir(),
+      Map("users" -> Seq("user_id")), warehouseBuckets = 4)
+    val q = pipeline.start(pipeline.readJsonStream(in, maxFilesPerTrigger = 2),
+      envSchema, Trigger.AvailableNow())
+    q.awaitTermination(120000)
+    spark.streams.active.foreach(_.awaitTermination(120000))
+    val reads = q.recentProgress.map(_.numInputRows).sum
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    assert(reads == lines, s"merge query read $reads rows for $lines landed lines")
+    assert(persisted == before, "a micro-batch cache outlived its merge")
+    val want = Set(("u0", "n33", "active"), ("u1", "n34", "active"),
+      ("u2", "n32", "active"))
+    assert(pipeline.readTable("users").get.select("user_id", "username", "status")
+      .as[(String, String, String)].collect().toSet == want)
+
+    // the same drain with the first merge attempt failing mid-job: the
+    // failed attempt's cache is released before withRetry rebuilds it
+    CdcPipelineSpec.failedOnce.set(false)
+    val failOnce = udf { (_: String) =>
+      if (CdcPipelineSpec.failedOnce.compareAndSet(false, true))
+        sys.error("injected merge failure")
+      true
+    }
+    val retrying = new CdcPipeline(spark, tmpDir(), tmpDir(),
+      Map("users" -> Seq("user_id")), warehouseBuckets = 4,
+      retryBaseBackoffMs = 1)
+    val (good, _) = retrying.parseWithDlq(retrying.readJsonStream(in,
+      maxFilesPerTrigger = 2), envSchema)
+    val q2 = Transforms.routeTable(good, "topic")
+      .withColumn("__deleted", (col("operation") === "DELETE").cast("string"))
+      .drop("topic", "operation")
+      .writeStream
+      .option("checkpointLocation", tmpDir())
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        retrying.mergeMicroBatch(b.filter(failOnce(col("user_id"))), id)
+      }
+      .start()
+    q2.awaitTermination(120000)
+    assert(q2.exception.isEmpty, s"retry did not recover: ${q2.exception}")
+    assert(CdcPipelineSpec.failedOnce.get(), "the injected failure never fired")
+    assert(persisted == before, "a failed attempt's cache outlived its retry")
+    assert(retrying.readTable("users").get.select("user_id", "username", "status")
+      .as[(String, String, String)].collect().toSet == want)
+  }
+
   test("ST1 exactly-once under HARD CRASH: a torn WAL commit (sink wrote, " +
       "commit lost) replays idempotently after restart and the warehouse " +
       "matches the no-crash run — snapshot AND bucketed-COW warehouses") {
@@ -452,4 +579,10 @@ class CdcPipelineSpec extends SparkSpec {
     assert(got == Map(6L -> "none", 1L -> "active", 2L -> "inactive",
       3L -> "active", 4L -> "active", 5L -> "__deleted"))
   }
+}
+
+object CdcPipelineSpec {
+  /** Flips on the first merge-job row it sees: a static flag, because a
+    * task runs a deserialized copy of the UDF closure. */
+  val failedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -69,6 +69,43 @@ class ObserveSpec extends SparkSpec {
     assert(outer == "outer-id" && Correlation.currentId.isEmpty) // cleaned up
   }
 
+  test("replication lag: draining 10-minute-old envelopes sets " +
+    "cdc_replication_lag_seconds from the merge query's progress and " +
+    "fires ReplicationLagHigh") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types._
+    val in = Files.createTempDirectory("lag-in").toString
+    val base = Files.createTempDirectory("lag").toString
+    val committedUs = (System.currentTimeMillis() - 600000L) * 1000L
+    Files.writeString(Paths.get(s"$in/b0.json"), (0 until 3).map(i =>
+      s"""{"topic":"scylla-cluster.app_data.users","operation":"UPDATE",""" +
+        s""""commit_timestamp":${committedUs + i},"user_id":"u$i"}""")
+      .mkString("\n"))
+    val schema = StructType(Seq(StructField("topic", StringType),
+      StructField("operation", StringType),
+      StructField("commit_timestamp", LongType),
+      StructField("user_id", StringType)))
+    val m = new MetricsRegistry("cdc")
+    val listener = new CdcQueryListener(m)
+    spark.streams.addListener(listener)
+    try {
+      val pipeline = new graft.cdc.CdcPipeline(spark, s"$base/wh", s"$base/ck",
+        Map("users" -> Seq("user_id")))
+      val q = pipeline.start(pipeline.readJsonStream(in), schema,
+        Trigger.AvailableNow())
+      q.awaitTermination(60000)
+      spark.streams.active.foreach(_.awaitTermination(60000))
+      listener.settle()
+      val lag = m.gauge("replication_lag_seconds", Map("query" -> q.id.toString))
+      assert(lag >= 600 && lag < 900, s"lag $lag s for 600 s old events")
+      val fired = Alerts.evaluate(m.snapshot(spark)).collect()
+        .map(_.getString(0)).toSet
+      assert(fired.contains("ReplicationLagHigh") &&
+        !fired.contains("ReplicationLagCritical"), s"fired: $fired")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("alert rules fire on threshold breach (alerts.py:45-322)") {
     val m = new MetricsRegistry("cdc")
     m.setGauge("replication_lag_seconds", 1000.0)   // > 900 critical, > 300 warning

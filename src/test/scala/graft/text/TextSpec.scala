@@ -985,6 +985,38 @@ class TextSpec extends SparkSpec {
     assert(native == sql)
   }
 
+  test("char_entropy kernel: the empty string gives (0, 0) and NULL stays " +
+      "NULL, interpreted and codegen alike") {
+    import graft.functions.EntropyExpressions
+    // RDD-backed frames: a local Seq would be folded at optimization
+    // time by the interpreted path alone
+    def frame(rows: (Long, String)*) =
+      spark.sparkContext.parallelize(rows, 1).toDF("id", "text")
+    def entropies(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), EntropyExpressions.charEntropy(col("text")).as("e"))
+        .collect().map(r => r.getLong(0) -> Option(r.getStruct(1))
+          .map(e => (e.getLong(0), e.getLong(1)))).toMap
+    val lnTwo = math.floor(math.log(2.0) * 1e6).toLong
+    Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true").foreach {
+      case (mode, wholeStage) =>
+        val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+        val saved = keys.map(k => k -> spark.conf.getOption(k))
+        spark.conf.set(keys(0), mode)
+        spark.conf.set(keys(1), wholeStage)
+        try {
+          assert(entropies(frame((0L, ""), (1L, "ab"), (2L, null))) ==
+            Map(0L -> Some((0L, 0L)), 1L -> Some((2L, lnTwo)), 2L -> None), mode)
+          assert(entropies(frame((0L, null), (1L, null))) ==
+            Map(0L -> None, 1L -> None), mode)
+          assert(entropies(frame((0L, ""), (1L, ""))) ==
+            Map(0L -> Some((0L, 0L)), 1L -> Some((0L, 0L))), mode)
+        } finally saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+    }
+  }
+
   test("sourceTokenGini: 0 when uniform, → (n−1)/n when one source dominates") {
     val uniform = Seq((1L, "a", "x y"), (2L, "b", "x y"), (3L, "c", "x y"))
       .toDF("doc_id", "source", "text")
